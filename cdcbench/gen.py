@@ -339,7 +339,6 @@ def main(spec: dict) -> dict:
         out["boot_rows"] = transcripts(con, seed, spec["conv"], f"{d}/boot.parquet")
         out.update(drifted_wal(con, seed, f"{d}/boot.parquet", spec["warm_events"],
                                spec["events"], spec["tag"], d))
-        out["keys"] = lookup_keys(con, seed, f"{d}/boot.parquet", spec["lookups"])
     else:
         raise ValueError(f"unknown workload {name!r}")
     con.close()

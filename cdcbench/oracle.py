@@ -59,10 +59,8 @@ def _digest(con, rel: str) -> tuple[int, int]:
 
 
 def check(con, boot: str | None, wal: list[str], actual_parquet: str) -> Check:
-    """Compare the engine's exported table with the oracle.  Leaves the
-    expected state in the temp table ``expected`` for ``lookup_mismatches``."""
-    con.execute(f"CREATE OR REPLACE TEMP TABLE expected AS {expected_sql(boot, wal)}")
-    exp = "SELECT * FROM expected"
+    """Compare the engine's exported table with the oracle."""
+    exp = expected_sql(boot, wal)
     act = f"SELECT {ROW}, ts_us FROM read_parquet('{actual_parquet}/*.parquet')"
     en, eh = _digest(con, exp)
     an, ah = _digest(con, act)
@@ -71,23 +69,6 @@ def check(con, boot: str | None, wal: list[str], actual_parquet: str) -> Check:
         only_e = con.sql(f"SELECT count(*) FROM (({exp}) EXCEPT ALL ({act}))").fetchone()[0]
         only_a = con.sql(f"SELECT count(*) FROM (({act}) EXCEPT ALL ({exp}))").fetchone()[0]
     return Check((en, eh) == (an, ah), en, an, eh, ah, int(only_e), int(only_a))
-
-
-def lookup_mismatches(con, lookups: dict) -> int:
-    """Key lookups whose result differs from the expected state: ``lookups``
-    maps ``(conv_id, turn_idx)`` to ``(role, text, tool, ts_us)`` or
-    ``None`` for an absent key.  Run after ``check``."""
-    if not lookups:
-        return 0
-    keys = ", ".join(f"('{c}', {int(t)})" for c, t in lookups)
-    want = {
-        (r[0], r[1]): tuple(r[2:])
-        for r in con.sql(f"""
-          SELECT e.conv_id, e.turn_idx, role, text, tool, ts_us FROM expected e
-          JOIN (VALUES {keys}) k(c, t) ON e.conv_id = k.c AND e.turn_idx = k.t
-        """).fetchall()
-    }
-    return sum(1 for k, v in lookups.items() if want.get(k) != v)
 
 
 def epoch_event_counts(con, wal: list[str], ranges: list[tuple[int, int]]) -> list[int]:

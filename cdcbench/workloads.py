@@ -39,7 +39,7 @@ SIZES = {
         "compact_every": 4,
     },
     "drift_heal": {"conv": 500, "events": 10_000, "epochs": 2, "warm_events": 2_000,
-                   "lookups": 12, "echo_every": 2, "buckets": 16},
+                   "echo_every": 2, "buckets": 16},
 }
 
 
@@ -190,18 +190,15 @@ def _export(ctx: Ctx, table, name: str) -> str:
 
 
 def _check(ctx: Ctx, out: Outcome, name: str, actual: str, boot: str | None,
-           wal: list[str], lookups: dict | None = None) -> bool:
-    """The DuckDB oracle against one exported table (and, for a table
-    that no longer changes, the key lookups made on it)."""
+           wal: list[str]) -> bool:
+    """The DuckDB oracle against one exported table."""
     con = gen.connect(ctx.cpus)
     try:
         chk = oracle.check(con, boot, wal, actual).as_dict()
-        if lookups is not None:
-            chk["lookup_mismatches"] = oracle.lookup_mismatches(con, lookups)
     finally:
         con.close()
     out.report.setdefault("checks", {})[name] = chk
-    return chk["ok"] and not chk.get("lookup_mismatches")
+    return chk["ok"]
 
 
 def peak_rss_mb(spark) -> float:
@@ -460,35 +457,6 @@ def replay_and_tail(ctx: Ctx) -> Outcome:
 
 
 # --- drift_heal ----------------------------------------------------------------
-def _static_reads(ctx: Ctx, table, ops: Ops, since: float, from_sid: str) -> dict:
-    """After a replay: key lookups on the final table (checked against
-    the oracle later) and a change-feed consumer that polls once per
-    append commit of the measured replay."""
-    keys = [tuple(k) for k in ctx.inputs["keys"]]
-    buckets = _buckets(ctx.spark, keys, table.n_buckets)
-    lat, got = [], {}
-    for key, b in zip(keys, buckets):
-        t = time.perf_counter()
-        try:
-            got[key] = _lookup(ctx, table, key, b)
-            ops.record(True)
-        except Exception:  # noqa: BLE001 — a failed lookup is counted, not fatal
-            ops.record(False)
-        lat.append(time.perf_counter() - t)
-    feed_lat, feed_files, prev = [], [], from_sid
-    for m in _commits(table, since):
-        t = time.perf_counter()
-        try:
-            feed_files.append(_feed_poll(ctx, table, prev, m["snapshot_id"]))
-            ops.record(True)
-        except Exception:  # noqa: BLE001
-            ops.record(False)
-        feed_lat.append(time.perf_counter() - t)
-        prev = m["snapshot_id"]
-    return {"lookup_lat": lat, "lookups": got, "feed_lat": feed_lat,
-            "feed_files": feed_files}
-
-
 def _replay_freshness(con, wal, commits, start) -> tuple[float, float]:
     """Event-weighted p50/p90 of the time from the replay call to the
     commit that made each event visible."""
@@ -528,7 +496,6 @@ def drift_heal(ctx: Ctx) -> Outcome:
     table.bootstrap(spark.read.parquet(boot_path))
     drifted("warm", inp["warm"], 1)  # warm-up: one canonical epoch on the same table
     out.metrics["setup_s"] = ctx.session_start_s + time.perf_counter() - t
-    from_sid = table.current_snapshot_id()
 
     b = inp["wal"]
     start = time.time()
@@ -554,11 +521,9 @@ def drift_heal(ctx: Ctx) -> Outcome:
         failed_checks.append(f"final mapping {got_map} != {truth}")
     ops.record(not failed_checks)
 
-    reads = _static_reads(ctx, table, ops, start, from_sid)
     out.metrics["read_full_s"] = _read_full(ctx, table)
     out.metrics["peak_rss_mb"] = peak_rss_mb(spark)
-    ok = _check(ctx, out, "drift", _export(ctx, table, "drift"), boot_path, [logical],
-                reads["lookups"])
+    ok = _check(ctx, out, "drift", _export(ctx, table, "drift"), boot_path, [logical])
     out.correct = ok and not failed_checks
     walls = _epoch_walls(commits, start)
     heal = [w for i, w in enumerate(walls) if i in got_epochs]
@@ -571,16 +536,12 @@ def drift_heal(ctx: Ctx) -> Outcome:
     out.metrics.update(
         events_per_s=b["n"] / wall,
         freshness_p50_s=f50, freshness_p90_s=f90,
-        lookup_p50_s=_pct(reads["lookup_lat"], 0.5),
-        lookup_p90_s=_pct(reads["lookup_lat"], 0.9),
-        feed_p50_s=_pct(reads["feed_lat"], 0.5),
         steady_epoch_s=statistics.median(steady) if steady else 0.0,
     )
     out.metrics["heal_epoch_s"] = statistics.median(heal) if heal else 0.0
     out.report["drift"] = {
         "replay_s": wall, "epochs": len(commits), "epoch_walls": walls,
         "realign_epochs": got_epochs, "failed_checks": failed_checks,
-        "feed_files": reads["feed_files"],
     }
     out.attempted, out.failed = ops.attempted, ops.failed
     return out
