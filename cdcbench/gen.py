@@ -11,11 +11,10 @@ Shapes follow FIXTURES.md:
 * ``changes`` (§2) — a binlog-shaped WAL: 20% of events on 1% of the
   conversations, 2% exact duplicates re-delivered at ``lsn + n``, 5%
   out-of-order ``ts``, 3% deletes, 30% updates;
-* ``changes_drifted`` (§3) — the same spine with the payload as
-  ``map<string,string>`` under a wire shape that flips between a flat
-  rename, a nested/indexed path shape and a retyped flat shape.  Field
-  names carry a tag derived from the seed, so every shape is new to the
-  JVM that meets it.
+* ``changes_drifted`` (§3) — value mutations of the bootstrap state
+  with the payload as ``map<string,string>`` under a nested, indexed
+  wire shape.  Field names carry a tag derived from the seed, so the
+  shape is new to the JVM that meets it.
 
 Every generator also leaves the logical events it encodes where the
 DuckDB oracle (``oracle.py``) can read them.
@@ -198,22 +197,14 @@ def tail_segments(con, seed: int, n_segments: int, seg_events: int, n_conv: int,
     return segs
 
 
-# --- drifted wire shapes ----------------------------------------------------
-SHAPES = ("canonical", "nested")
-
-
-def shape_fields(shape: str, tag: str) -> dict[str, str]:
-    """Target column → wire field name of one shape (the ground-truth
-    mapping; ``[*]`` marks the wildcard the mapper reports for an
-    indexed path).  ``canonical`` is the table's own column names;
-    ``nested`` carries ``tag`` in every name."""
-    if shape == "canonical":
-        return {c: c for c in ("conv_id", "turn_idx", "role", "text", "tool", "ts")}
-    if shape == "nested":
-        return {"conv_id": f"msg_{tag}.conv", "turn_idx": f"msg_{tag}.idx",
-                "role": f"msg_{tag}.meta.role", "text": f"msg_{tag}.body",
-                "tool": f"tools_{tag}[*].name", "ts": f"msg_{tag}.meta.time"}
-    raise ValueError(shape)
+# --- drifted wire shape -----------------------------------------------------
+def nested_fields(tag: str) -> dict[str, str]:
+    """Target column → wire field name of the drifted shape, each name
+    carrying ``tag`` (the ground-truth mapping; ``[*]`` marks the
+    wildcard the mapper reports for an indexed path)."""
+    return {"conv_id": f"msg_{tag}.conv", "turn_idx": f"msg_{tag}.idx",
+            "role": f"msg_{tag}.meta.role", "text": f"msg_{tag}.body",
+            "tool": f"tools_{tag}[*].name", "ts": f"msg_{tag}.meta.time"}
 
 
 def canonical_mapping_json() -> str:
@@ -233,11 +224,10 @@ def canonical_mapping_json() -> str:
     })
 
 
-def _wire_sql(shape: str, tag: str, rel: str) -> str:
-    """(lsn, op, payload map) of ``rel`` under ``shape``; ``ts`` travels
-    as an ISO-8601 string, ``nested`` puts the tool in an indexed array
-    path."""
-    f = shape_fields(shape, tag)
+def _wire_sql(tag: str, rel: str) -> str:
+    """(lsn, op, payload map) of ``rel`` in the drifted shape; ``ts``
+    travels as an ISO-8601 string, the tool in an indexed array path."""
+    f = nested_fields(tag)
     entries = [
         (f["conv_id"], "conv_id"),
         (f["turn_idx"], "turn_idx::VARCHAR"),
@@ -255,17 +245,15 @@ def _wire_sql(shape: str, tag: str, rel: str) -> str:
     """
 
 
-def drifted_wal(con, seed: int, boot_path: str, n_warm: int, n_events: int, tag: str,
+def drifted_wal(con, seed: int, boot_path: str, n_events: int, tag: str,
                 out_dir: str) -> dict:
     """A drifted WAL over the bootstrap state at ``boot_path``: 70%
     updates echoing a current row (a fifth of them edit the text, with a
     later ts — real value mutations), 25% inserts of new turns, 5%
-    deletes.  LSNs are dense from 1.  The first ``n_warm`` events
-    (``warm.parquet``) and the first half of the next ``n_events``
-    (``drifted.parquet``) arrive in the canonical shape; the rest flips
-    to the seed-tagged nested shape.  The logical events of both
-    files go to ``logical.parquet``.  Returns ``{warm, wal}`` extents,
-    ``wal`` with ``flip``, the first LSN of the new shape."""
+    deletes.  LSNs are dense from 1.  Every event arrives in the
+    seed-tagged nested shape (``drifted.parquet``), so the shape has
+    flipped since the canonical mapping was stored; the logical events
+    go to ``logical.parquet``.  Returns the ``wal`` extent."""
     _register_pool(con, seed + 2)
     con.execute(f"""
       CREATE OR REPLACE TEMP TABLE boot AS
@@ -280,7 +268,7 @@ def drifted_wal(con, seed: int, boot_path: str, n_warm: int, n_events: int, tag:
         SELECT i, i + 1 AS lsn, unif({seed}, 61, i) AS v,
                unif({seed}, 62, i) < 0.2 AS mutate,
                pick({seed}, 63, i, {n_boot}) AS k
-        FROM range({n_warm + n_events}) t(i)
+        FROM range({n_events}) t(i)
       )
       SELECT ev.lsn,
         CASE WHEN v < 0.05 THEN 'D' WHEN v < 0.75 THEN 'U' ELSE 'I' END AS op,
@@ -299,16 +287,9 @@ def drifted_wal(con, seed: int, boot_path: str, n_warm: int, n_events: int, tag:
               JOIN phrase_pool p ON p.pid = pick({seed + 2}, 60, i, {POOL})
     """)
     _copy(con, f"SELECT {LOGICAL_COLS} FROM drift_events", f"{out_dir}/logical.parquet")
-    lo, flip, hi = n_warm + 1, n_warm + n_events // 2 + 1, n_warm + n_events
-    _copy(con, _wire_sql("canonical", tag, f"SELECT * FROM drift_events WHERE lsn < {lo}"),
-          f"{out_dir}/warm.parquet")
-    _copy(con, _wire_sql("canonical", tag,
-                         f"SELECT * FROM drift_events WHERE lsn >= {lo} AND lsn < {flip}")
-          + " UNION ALL " + _wire_sql("nested", tag,
-                                      f"SELECT * FROM drift_events WHERE lsn >= {flip}"),
+    _copy(con, _wire_sql(tag, "SELECT * FROM drift_events"),
           f"{out_dir}/drifted.parquet")
-    return {"warm": {"lo": 1, "hi": n_warm, "n": n_warm},
-            "wal": {"lo": lo, "hi": hi, "n": n_events, "flip": flip}}
+    return {"wal": {"lo": 1, "hi": n_events, "n": n_events}}
 
 
 def lookup_keys(con, seed: int, source: str, k: int) -> list[tuple[str, int]]:
@@ -337,8 +318,8 @@ def main(spec: dict) -> dict:
         out["keys"] = lookup_keys(con, seed, f"{d}/boot.parquet", spec["lookups"])
     elif name == "drift_heal":
         out["boot_rows"] = transcripts(con, seed, spec["conv"], f"{d}/boot.parquet")
-        out.update(drifted_wal(con, seed, f"{d}/boot.parquet", spec["warm_events"],
-                               spec["events"], spec["tag"], d))
+        out.update(drifted_wal(con, seed, f"{d}/boot.parquet", spec["events"],
+                               spec["tag"], d))
     else:
         raise ValueError(f"unknown workload {name!r}")
     con.close()

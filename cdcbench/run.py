@@ -106,6 +106,7 @@ def start_spark(cpus: int, work: str):
         "spark.ui.showConsoleProgress": "false",
         "spark.ui.retainedJobs": "100000",
         "spark.ui.retainedStages": "100000",
+        "spark.sql.ui.retainedExecutions": "100000",
     })
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -131,14 +132,16 @@ def stop_spark(spark) -> None:
 
 
 def start_generator(workload: str, seed: int, seconds: float, scale: float, cpus: int,
-                    work: str):
+                    work: str, rate: float | None = None):
     """Start building the workload's inputs in a child process (its
     memory stays out of the driver's peak RSS).  Returns ``(size, spec,
     process)``; ``inputs_of`` waits for it."""
     import workloads
 
     size = dict(workloads.SIZES[workload])
-    for k in ("events", "warm_events", "conv"):
+    if rate:
+        size["rate"] = rate
+    for k in ("events", "conv"):
         if k in size:
             size[k] = max(90, int(size[k] * scale))
     if workload == "drift_heal":
@@ -159,6 +162,7 @@ def inputs_of(spec: dict, proc) -> dict:
 
 
 def run_one(args) -> int:
+    t_run = time.perf_counter()
     cpus = nproc()
     sys.path.insert(0, ROOT)
     try:
@@ -179,7 +183,7 @@ def run_one(args) -> int:
         # the inputs are generated while the session starts; set-up time
         # is the session start plus the workload's own set-up
         size, spec, gen = start_generator(args.workload, args.seed, args.seconds,
-                                          args.scale, cpus, work)
+                                          args.scale, cpus, work, args.rate)
         t = time.perf_counter()
         spark = start_spark(cpus, work)
         session_s = time.perf_counter() - t
@@ -220,6 +224,7 @@ def run_one(args) -> int:
         "correct": out.correct, "attempted": out.attempted, "failed": out.failed,
         "metrics": {k: {"value": v, "unit": UNITS[k]} for k, v in out.metrics.items()},
         "layers": out.layers, "layer_table": table, "report": out.report,
+        "run_s": time.perf_counter() - t_run,
     }
     print(REPORT + json.dumps(report, default=str), flush=True)
     print(json.dumps({
@@ -307,10 +312,11 @@ def run_all(args) -> int:
         if traced:
             lt = traced["layer_table"]
             print(f"  layer table (traced): wall {lt['wall_s']:.3f} s, "
-                  f"layers sum {lt['sum_s']:.3f} s, coverage {lt['coverage']:.3f}")
+                  f"layers {lt['covered_s']:.3f} s, coverage {lt['coverage']:.3f}, "
+                  f"unattributed {lt['unattributed_s']:.3f} s")
             for layer, r in sorted(lt["layers"].items()):
-                print(f"    {layer:<10} self {r['self_s']:8.3f} s  spark jobs "
-                      f"{r['job_s']:8.3f} s  spans {r['spans']}")
+                print(f"    {layer:<10} self {r['self_s']:8.3f} s  spark "
+                      f"{r['spark_s']:8.3f} s  spans {r['spans']}")
             for k, v in traced["layers"].items():
                 print(f"    {k:<32} {v:.6g}")
             if plain:
@@ -328,6 +334,9 @@ def main() -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--scale", type=float, default=1.0,
                     help="input size factor (the benchmark's tests use a small one)")
+    ap.add_argument("--rate", type=float, default=None,
+                    help="replay_and_tail: offered segment rate per second, to measure "
+                         "the tail's sustainable rate (default: the workload's own)")
     ap.add_argument("--scaling", type=int, choices=(0, 1), default=None,
                     help="replay_and_tail: also run the 1-CPU leg behind scaling_eff "
                          "(default: on with --workload all, off otherwise)")

@@ -6,8 +6,9 @@ from the outside: each call becomes a span with a name, start, end,
 parent span and run id, and the Spark jobs it submits carry its span id
 as their job group.  After the run, ``job_metrics`` reads those jobs
 and their stages back from ``sparkContext._jsc.sc().statusStore()``,
-which works with ``spark.ui.enabled=false``.  Spans stay in memory and
-are written out once, at exit.
+and ``sql_executions`` the SQL executions that ran them from the SQL
+status store; both work with ``spark.ui.enabled=false``.  Spans stay in
+memory and are written out once, at exit.
 """
 
 from __future__ import annotations
@@ -237,7 +238,30 @@ def job_metrics(spark) -> list[Job]:
     return jobs
 
 
-def _union_len(intervals: list[tuple[float, float]]) -> float:
+@dataclass
+class Execution:
+    """One SQL execution (an action: planning, its jobs, result transfer)."""
+    start: float
+    end: float
+    job_ids: list[int]
+
+
+def sql_executions(spark) -> list[Execution]:
+    """Every completed SQL execution in the SQL status store, with its jobs."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    out = []
+    for e in _seq(store.executionsList()):
+        if not e.completionTime().isDefined():
+            continue
+        ids, it = [], e.jobs().keys().iterator()
+        while it.hasNext():
+            ids.append(int(it.next()))
+        out.append(Execution(e.submissionTime() / 1e3,
+                             e.completionTime().get().getTime() / 1e3, ids))
+    return out
+
+
+def union_len(intervals: list[tuple[float, float]]) -> float:
     total, cur_s, cur_e = 0.0, None, None
     for s, e in sorted(intervals):
         if cur_e is None or s > cur_e:
@@ -251,10 +275,14 @@ def _union_len(intervals: list[tuple[float, float]]) -> float:
     return total
 
 
-def attribute(spans: list[Span], jobs: list[Job]) -> dict[str, dict]:
-    """Per span: its jobs, its job time, its self time (duration minus
-    the union of its child spans and its own job intervals), and the
-    jobs of its whole subtree."""
+def attribute(spans: list[Span], jobs: list[Job],
+              executions: list[Execution] = ()) -> dict[str, dict]:
+    """Per span: its jobs; its Spark time (the union of its own jobs and
+    of the SQL executions it started that ran them, clipped to the span,
+    outside its child spans); its self time (duration minus the union of
+    its child spans and its Spark time); and the jobs of its whole
+    subtree.  An execution that began before the span (a micro-batch
+    around ``foreachBatch``) is its caller's, not the span's."""
     by_id = {sp.span_id: sp for sp in spans}
     children: dict[str, list[Span]] = {}
     for sp in spans:
@@ -264,6 +292,12 @@ def attribute(spans: list[Span], jobs: list[Job]) -> dict[str, dict]:
     for j in jobs:
         if j.group in by_id:
             own.setdefault(j.group, []).append(j)
+    group_of = {j.job_id: j.group for j in jobs}
+    own_sql: dict[str, list[tuple[float, float]]] = {}
+    for e in executions:
+        g = next((group_of[i] for i in e.job_ids if i in group_of), None)
+        if g in by_id:
+            own_sql.setdefault(g, []).append((e.start, e.end))
     out = {}
 
     def subtree_jobs(sid: str) -> list[Job]:
@@ -274,29 +308,17 @@ def attribute(spans: list[Span], jobs: list[Job]) -> dict[str, dict]:
 
     for sp in spans:
         mine = own.get(sp.span_id, [])
-        covered = [(c.start, c.end) for c in children.get(sp.span_id, [])]
-        covered += [(max(j.start, sp.start), min(j.end, sp.end)) for j in mine]
-        covered = [(s, e) for s, e in covered if e > s]
+        started = [(s, e) for s, e in own_sql.get(sp.span_id, []) if s >= sp.start - 1e-3]
+        spark = [(max(s, sp.start), min(e, sp.end))
+                 for s, e in [(j.start, j.end) for j in mine] + started]
+        spark = [(s, e) for s, e in spark if e > s]
+        kids = [(c.start, c.end) for c in children.get(sp.span_id, [])]
+        busy = union_len(kids + spark)
         out[sp.span_id] = {
             "span": sp,
             "jobs": mine,
-            "job_s": _union_len([(j.start, j.end) for j in mine]),
-            "self_s": max(0.0, sp.dur - _union_len(covered)),
+            "spark_s": busy - union_len(kids),
+            "self_s": max(0.0, sp.dur - busy),
             "tree_jobs": subtree_jobs(sp.span_id),
         }
     return out
-
-
-def layer_table(attr: dict[str, dict], wall_s: float) -> dict:
-    """Self and Spark-job seconds per layer (the span-name prefix), and
-    how closely their sum covers ``wall_s``."""
-    layers: dict[str, dict] = {}
-    for a in attr.values():
-        layer = a["span"].name.split(".")[0]
-        row = layers.setdefault(layer, {"self_s": 0.0, "job_s": 0.0, "spans": 0})
-        row["self_s"] += a["self_s"]
-        row["job_s"] += a["job_s"]
-        row["spans"] += 1
-    total = sum(r["self_s"] + r["job_s"] for r in layers.values())
-    return {"layers": layers, "sum_s": total, "wall_s": wall_s,
-            "coverage": total / wall_s if wall_s else 0.0}

@@ -6,8 +6,9 @@ the engine's output against the DuckDB oracle, and returns an
   merge-on-read table, then, in the same JVM, a live tail of WAL
   segments into a bootstrapped table while readers issue key lookups
   and change-feed polls beside it;
-* ``drift_heal`` — a drifted map-payload WAL whose wire shape flips to
-  seed-named fields, replayed with the key probe and echo audit on.
+* ``drift_heal`` — a drifted map-payload WAL in seed-named fields,
+  replayed from the canonical shape's stored mapping with the key probe
+  and echo audit on.
 
 Engine entry points are always called through their module or class
 attribute (``replay.run_replay``, ``table.apply_epoch``...), so the
@@ -31,15 +32,15 @@ import spans
 SIZES = {
     "replay_and_tail": {
         # bulk phase: WAL events (duplicates come on top), LSN-span epochs
-        "events": 150_000, "epochs": 2, "buckets": 32,
+        "events": 120_000, "epochs": 2, "buckets": 32,
         # tail phase: bootstrap conversations, segment size, offered rate,
         # table buckets (the engine's default), reader rates
-        "conv": 1_000, "seg_events": 200, "rate": 17.0, "warm_segments": 4,
+        "conv": 500, "seg_events": 200, "rate": 17.0, "warm_segments": 4,
         "tail_buckets": 16, "lookups": 24, "lookup_rate": 1.0, "feed_rate": 0.5,
         "compact_every": 4,
     },
-    "drift_heal": {"conv": 500, "events": 10_000, "epochs": 2, "warm_events": 2_000,
-                   "echo_every": 2, "buckets": 16},
+    "drift_heal": {"conv": 300, "events": 4_000, "epochs": 2, "echo_every": 2,
+                   "buckets": 16},
 }
 
 
@@ -65,6 +66,29 @@ class Ctx:
     tracer: object  # spans.Tracer, or spans.NullTracer when untraced
     session_start_s: float
     phases: dict = field(default_factory=dict)  # "replay"/"tail" -> Phase
+    # (name, start, seconds) of every measured call, by the benchmark's
+    # own stopwatch: the wall time the traced run's layer table must cover
+    calls: list = field(default_factory=list)
+
+    def timed(self, name: str) -> "_Timed":
+        """Stopwatch around a ``bench.*`` span; ``.s`` holds the seconds."""
+        return _Timed(self, name)
+
+
+class _Timed:
+    def __init__(self, ctx: Ctx, name: str):
+        self.ctx, self.name, self.s = ctx, name, 0.0
+
+    def __enter__(self) -> "_Timed":
+        self.start, self.t = time.time(), time.perf_counter()
+        self.span = self.ctx.tracer.span(self.name)
+        self.span.__enter__()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.span.__exit__(*exc)
+        self.s = time.perf_counter() - self.t
+        self.ctx.calls.append((self.name, self.start, self.s))  # list.append is atomic
 
 
 @dataclass
@@ -148,7 +172,7 @@ def _lookup(ctx: Ctx, table, key, bucket: int):
     ``(role, text, tool, ts_us)`` or ``None`` for an absent key."""
     from pyspark.sql import functions as F
 
-    with ctx.tracer.span("bench.lookup"):
+    with ctx.timed("bench.lookup"):
         rows = (
             table.read(ctx.spark, buckets=[bucket])
             .where((F.col("conv_id") == key[0]) & (F.col("turn_idx") == key[1]))
@@ -164,7 +188,7 @@ def _feed_poll(ctx: Ctx, table, from_sid: str, to_sid: str) -> int:
     number of delta files it read (counted only when traced)."""
     from filipo_spark.table import changes
 
-    with ctx.tracer.span("bench.feed_poll"):
+    with ctx.timed("bench.feed_poll"):
         df = changes.changes_between(ctx.spark, table, from_sid, to_sid)
         _noop(df)
     return len(df.inputFiles()) if isinstance(ctx.tracer, spans.Tracer) else 0
@@ -172,10 +196,9 @@ def _feed_poll(ctx: Ctx, table, from_sid: str, to_sid: str) -> int:
 
 def _read_full(ctx: Ctx, table) -> float:
     """One materialized ``read_logical`` of the whole table, seconds."""
-    with ctx.tracer.span("bench.read_full"):
-        t = time.perf_counter()
+    with ctx.timed("bench.read_full") as tm:
         _noop(table.read_logical(ctx.spark))
-        return time.perf_counter() - t
+    return tm.s
 
 
 def _export(ctx: Ctx, table, name: str) -> str:
@@ -233,10 +256,9 @@ def _bulk_phase(ctx: Ctx, ops: Ops, out: Outcome) -> Phase:
     bs, bounds = (b["hi"] - b["lo"]) // size["epochs"] + 1, (b["lo"], b["hi"], b["n"])
     log = spark.read.parquet(os.path.join(inputs, "wal.parquet"))
     start = time.time()
-    with ctx.tracer.span("bench.replay"):
-        t = time.perf_counter()
+    with ctx.timed("bench.replay") as tm:
         replay.run_replay(spark, table, log, batch_size=bs, bounds=bounds)
-        wall = time.perf_counter() - t
+    wall = tm.s
     commits = _commits(table, start)
     for _ in commits:
         ops.record(True)
@@ -291,9 +313,10 @@ def _schedule(stop: threading.Event, t0: float, rate: float, op) -> list[float]:
 
 def _tail_phase(ctx: Ctx, ops: Ops, out: Outcome) -> tuple[Phase, list[str]]:
     """A continuous tail into a bootstrapped table (key bloom on,
-    compaction cadence set); its set-up is the run's warm-up.  The main thread lands pre-generated
-    segments by atomic rename at a fixed rate; two reader threads issue
-    bucket-pruned key lookups and change-feed polls at fixed rates.
+    compaction cadence set); its set-up is the run's warm-up.  The main
+    thread lands pre-generated segments by atomic rename at a fixed rate;
+    reader threads issue bucket-pruned key lookups and change-feed polls
+    at fixed rates.
     Returns the phase and every WAL segment file the table consumed."""
     from filipo_spark.streaming import tail
     from filipo_spark.table.icelet import IceletTable
@@ -302,31 +325,32 @@ def _tail_phase(ctx: Ctx, ops: Ops, out: Outcome) -> tuple[Phase, list[str]]:
     spark, inp, size = ctx.spark, ctx.inputs, ctx.size
     boot_path = os.path.join(ctx.work, "inputs", "boot.parquet")
 
-    def run_tail(name, available_now):
-        src = os.path.join(ctx.work, f"{name}-src")
-        os.makedirs(src, exist_ok=True)
-        stats = tail.tail_changelog(
-            spark, src, table, os.path.join(ctx.work, f"{name}-ckpt"),
-            available_now=available_now, compact_every=size["compact_every"],
-            compact_min_files=size["compact_every"])
-        return src, stats
-
     def land(seg, src):
         path = os.path.join(src, os.path.basename(seg["file"]))
         os.rename(seg["file"], path)
         return path
 
+    def covered(hi):
+        return any(m["offset_hi"] is not None and m["offset_hi"] >= hi
+                   for m in table.manifest())
+
     t = time.perf_counter()
     table = IceletTable.create(os.path.join(ctx.work, "tail"),
                                n_buckets=size["tail_buckets"], bloom_bits=DEFAULT_BITS)
     table.bootstrap(spark.read.parquet(boot_path))
-    # warm-up on the same table: the WAL's first segments drained by a
-    # one-shot tail, then one lookup and one feed poll
+    # warm-up through the live query itself: its first segments, then one
+    # lookup and one feed poll, so the measured window starts on a query
+    # that has already run a batch
     boot_sid = table.current_snapshot_id()
-    warm_src = os.path.join(ctx.work, "warm-src")
-    os.makedirs(warm_src)
-    wal = [land(seg, warm_src) for seg in inp["warm_segments"]]
-    run_tail("warm", True)
+    src = os.path.join(ctx.work, "src")
+    os.makedirs(src)
+    stats = tail.tail_changelog(
+        spark, src, table, os.path.join(ctx.work, "ckpt"), available_now=False,
+        compact_every=size["compact_every"], compact_min_files=size["compact_every"])
+    wal = [land(seg, src) for seg in inp["warm_segments"]]
+    deadline = time.time() + 120
+    while not covered(inp["warm_segments"][-1]["hi"]) and time.time() < deadline:
+        time.sleep(0.05)
     keys = [tuple(k) for k in inp["keys"]]
     buckets = _buckets(spark, keys, table.n_buckets)
     _lookup(ctx, table, keys[0], buckets[0])
@@ -339,9 +363,8 @@ def _tail_phase(ctx: Ctx, ops: Ops, out: Outcome) -> tuple[Phase, list[str]]:
         listener = _BatchListener()
         spark.streams.addListener(listener.listener)
     segs = inp["segments"]
-    src, stats = run_tail("live", False)
     stop = threading.Event()
-    t0 = time.time() + 0.5
+    t0 = time.time() + 0.2
     results: dict[str, list] = {"feed_files": []}
 
     def lookups(k):
@@ -385,9 +408,7 @@ def _tail_phase(ctx: Ctx, ops: Ops, out: Outcome) -> tuple[Phase, list[str]]:
             late.append(time.time() - due)
         landed_end = time.time()
         deadline = time.time() + 60
-        while time.time() < deadline and not any(
-                m["offset_hi"] is not None and m["offset_hi"] >= segs[-1]["hi"]
-                for m in table.manifest()):
+        while time.time() < deadline and not covered(segs[-1]["hi"]):
             time.sleep(0.05)
     finally:
         stop.set()
@@ -406,7 +427,8 @@ def _tail_phase(ctx: Ctx, ops: Ops, out: Outcome) -> tuple[Phase, list[str]]:
             spark.streams.removeListener(listener.listener)
 
     end = time.time()
-    commits = _commits(table, t0 - 1)
+    warm_hi = inp["warm_segments"][-1]["hi"]
+    commits = [m for m in _commits(table, t0 - 1) if m["offset_hi"] > warm_hi]
     commit_of = []
     for seg in segs:
         c = next((m for m in commits if m["offset_lo"] < seg["hi"] <= m["offset_hi"]), None)
@@ -424,12 +446,16 @@ def _tail_phase(ctx: Ctx, ops: Ops, out: Outcome) -> tuple[Phase, list[str]]:
         if len(commits) > 1 else 0.0,
     )
     out.report["tail"] = {
-        "segments": len(segs), "offered_rate_seg_s": size["rate"],
+        "segments": len(segs), "offered_rate_seg_s": size["rate"], "phase_s": end - t0,
         "seg_events": size["seg_events"], "batches": len(commits),
         "lookups": len(results.get("lookup", [])), "feed_polls": len(results.get("feed", [])),
         "lander_late_max_s": max(late),
         "backlog_end_segments": sum(1 for c in commit_of if c is None or c["t"] > landed_end),
         "segments_per_batch": [sum(1 for c in commit_of if c is m) for m in commits],
+        # median freshness of each quarter of the segments, in landing
+        # order: it grows from quarter to quarter when the tail falls behind
+        "freshness_quarters_s": [
+            _pct(fresh[q * len(fresh) // 4:(q + 1) * len(fresh) // 4], 0.5) for q in range(4)],
         "feed_files": results["feed_files"],
         "compactions": len(_commits(table, t0 - 1, "compact")),
     }
@@ -468,10 +494,10 @@ def _replay_freshness(con, wal, commits, start) -> tuple[float, float]:
 
 def drift_heal(ctx: Ctx) -> Outcome:
     """A drifted WAL replayed onto a bootstrapped table (key bloom on, so
-    the key probe runs every epoch; echo audit on a cadence), starting
-    from the canonical shape's stored mapping.  The first epoch arrives
-    in the canonical shape; then the wire shape flips to seed-named
-    nested fields and the replay must realign on exactly that epoch."""
+    the key probe runs every epoch; echo audit on a cadence) by a fresh
+    replay job that resumes from the canonical shape's stored mapping.
+    The wire shape has flipped to seed-named nested fields since, so the
+    replay must realign on its first epoch, cold, and on no other."""
     from filipo_spark import replay
     from filipo_spark.align import Mapping
     from filipo_spark.table.icelet import IceletTable
@@ -484,35 +510,30 @@ def drift_heal(ctx: Ctx) -> Outcome:
     # the operator resumes with the stored function store of the canonical shape
     canonical = Mapping.from_json(gen.canonical_mapping_json())
 
-    def drifted(name, b, epochs):
-        return replay.run_drifted_replay(
-            spark, table, spark.read.parquet(os.path.join(inputs, f"{name}.parquet")),
-            batch_size=b["n"] // epochs, bounds=(b["lo"], b["hi"], b["n"]),
-            mapping=canonical, echo_check_every=size["echo_every"])
-
     t = time.perf_counter()
     table = IceletTable.create(os.path.join(ctx.work, "drift"), n_buckets=size["buckets"],
                                bloom_bits=DEFAULT_BITS)
     table.bootstrap(spark.read.parquet(boot_path))
-    drifted("warm", inp["warm"], 1)  # warm-up: one canonical epoch on the same table
     out.metrics["setup_s"] = ctx.session_start_s + time.perf_counter() - t
 
     b = inp["wal"]
     start = time.time()
-    with ctx.tracer.span("bench.replay"):
-        t = time.perf_counter()
-        rep = drifted("drifted", b, size["epochs"])
-        wall = time.perf_counter() - t
+    with ctx.timed("bench.replay") as tm:
+        rep = replay.run_drifted_replay(
+            spark, table, spark.read.parquet(os.path.join(inputs, "drifted.parquet")),
+            batch_size=b["n"] // size["epochs"], bounds=(b["lo"], b["hi"], b["n"]),
+            mapping=canonical, echo_check_every=size["echo_every"])
+    wall = tm.s
     commits = _commits(table, start)
     for _ in commits:
         ops.record(True)
     ctx.phases["replay"] = Phase(start, time.time(), table, commits, b["n"])
 
-    # the healing checks: exactly one realign, on the epoch where the
-    # shape flips, ending on the new shape's ground-truth mapping
-    want_epochs = [(b["flip"] - b["lo"]) * size["epochs"] // b["n"]]
+    # the healing checks: exactly one realign, on the first epoch, ending
+    # on the drifted shape's ground-truth mapping
+    want_epochs = [0]
     got_epochs = [r["epoch"] for r in rep.realigns]
-    truth = gen.shape_fields(gen.SHAPES[-1], inp["tag"])
+    truth = gen.nested_fields(inp["tag"])
     got_map = rep.mapping.as_dict() if rep.mapping is not None else {}
     failed_checks = []
     if got_epochs != want_epochs:
